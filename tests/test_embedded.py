@@ -189,6 +189,38 @@ def test_rdfa_never_raises_on_hostile_markup():
         assert all("nope" not in (t[2] or "") for t in ts)
 
 
+def test_bare_attribute_rule_rdfa_absent_microdata_empty():
+    """A bare attribute is ABSENT to RDFa but '' to microdata. RDFa: a
+    bare ``property`` next to ``typeof`` leaves a property-less typeof
+    element, which mints a blank-node subject; ``property=""`` is a
+    (termless) property, so the element keeps the parent's subject."""
+    from tortank_spark.microdata import extract_microdata_triples
+
+    page = ('<div vocab="http://s/" about="http://a/1">'
+            '<div property{} typeof="T"><span property="n">x</span>'
+            "</div></div>")
+    ts, err = extract_rdfa_triples(page.format(""))
+    assert err is None
+    assert ts == [
+        ("_:1", "bnode", RDF_TYPE, "http://s/T", "iri", None, None),
+        ("_:1", "bnode", "http://s/n", "x", "literal", XSD + "string",
+         None),
+    ]
+    ts, err = extract_rdfa_triples(page.format('=""'))
+    assert err is None
+    assert ts == [
+        ("http://a/1", "iri", RDF_TYPE, "http://s/T", "iri", None, None),
+        ("http://a/1", "iri", "http://s/n", "x", "literal",
+         XSD + "string", None),
+    ]
+    ts, err = extract_microdata_triples(
+        '<div itemscope itemtype="http://s/T">'
+        '<meta itemprop="x" content></div>')
+    assert err is None
+    assert ("_:1", "bnode", "http://s/x", "", "literal", XSD + "string",
+            None) in ts
+
+
 def test_rdfa_unclosed_property_literal_closes_at_eof():
     ts, err = extract_rdfa_triples(
         '<div about="http://a/1" vocab="http://s/">'
@@ -251,13 +283,13 @@ def test_extract_embedded_single_scan_and_tags(spark, mixed_pages):
     assert by_syntax["turtle"] == {"u:t"}
     assert by_syntax["jsonld"] == {"u:j"}
     assert by_syntax["rdfa"] == {"u:r"}
-    # ONE scan of the page table: mapInPandas fuses all three parsers
+    # ONE scan of the page table: mapInArrow fuses all four parsers
     from tests.test_plans import plan_of
 
     plan = plan_of(out)
     tree = plan.split("\n\n")[0]
     assert sum("Scan" in ln for ln in tree.splitlines()) == 1
-    assert sum("MapInPandas" in ln for ln in tree.splitlines()) == 1
+    assert sum("MapInArrow" in ln for ln in tree.splitlines()) == 1
     assert "Exchange" not in plan and "Union" not in plan
 
 
@@ -274,6 +306,50 @@ def test_extract_embedded_prunes_to_url_text(spark, tmp_path):
     read_schema = scan[scan.index("ReadSchema"):].splitlines()[0]
     assert "url" in read_schema and "text" in read_schema
     assert "html" not in read_schema and "warc_ts" not in read_schema
+
+
+@pytest.fixture(scope="module")
+def wide_pages_parquet(spark, tmp_path_factory):
+    """A page table with every PAGE_SCHEMA column, so a plan can show
+    which columns the scan reads."""
+    from tortank_spark import fixtures
+
+    p = str(tmp_path_factory.mktemp("wide") / "pages")
+    spark.createDataFrame(
+        [fixtures._page_row(f"http://p/{i}", i, fixtures._filler_text(i))
+         for i in range(4)],
+        fixtures.PAGE_SCHEMA,
+    ).write.parquet(p)
+    return p
+
+
+@pytest.mark.parametrize("entry", [
+    "extract.extract_triples", "extract.extract_embedded",
+    "jsonld.extract_jsonld", "rdfa.extract_rdfa",
+    "microdata.extract_microdata", "extract.doc_metrics",
+    "weblinks.extract_links",
+])
+def test_extraction_entry_points_one_pruned_arrow_stage(
+        spark, wide_pages_parquet, entry):
+    """Every per-page extraction entry point is ONE mapInArrow stage
+    over ONE scan that reads only url+text: no pandas stage, no
+    shuffle."""
+    import importlib
+
+    from tests.test_plans import plan_of
+
+    module, fn = entry.split(".")
+    stage = getattr(importlib.import_module(f"tortank_spark.{module}"), fn)
+    plan = plan_of(stage(spark.read.parquet(wide_pages_parquet)))
+    tree = plan.split("\n\n")[0].splitlines()
+    assert sum("Scan" in ln for ln in tree) == 1
+    assert sum("MapInArrow" in ln for ln in tree) == 1
+    assert "MapInPandas" not in plan and "Exchange" not in plan
+    scan = plan[plan.index("Scan parquet"):]
+    read_schema = scan[scan.index("ReadSchema"):].splitlines()[0]
+    assert "url" in read_schema and "text" in read_schema
+    assert "html" not in read_schema and "warc_ts" not in read_schema
+    assert "lang" not in read_schema
 
 
 # ------------------------------------------------------- microdata unit

@@ -1,4 +1,4 @@
-"""End-to-end extraction gate: pages -> mapInPandas parse -> triples,
+"""End-to-end extraction gate: pages -> mapInArrow parse -> triples,
 compared against the reference goldens with the reference's own
 set-difference semantics (P/R must be 1.0 on the fixture corpus), plus
 the byte-identical text passthrough invariant from BASELINE.json."""
@@ -80,6 +80,45 @@ def test_text_byte_fidelity_per_url(spark):
         want_sha = hashlib.sha1(text.encode("utf-8")).hexdigest()
         assert metrics[url]["text_sha1"] == want_sha
         assert metrics[url]["n_chars"] == len(text)
+
+
+def test_doc_metrics_one_row_per_page_offline(spark):
+    """doc_metrics over in-repo pages only: one row per page, broken
+    pages quarantine with their error, the sha1/n_chars witness counts
+    code points (not bytes), and n_triples agrees with extract_triples'
+    good rows on the same pages."""
+    texts = {
+        "u:filler": fixtures._filler_text(3),
+        "u:bnodes": fixtures._bnode_heavy_text(20),
+        "u:broken": fixtures.BROKEN_DOC,
+        "u:empty": "",
+        "u:utf8": '<http://e/a> <http://e/b> "h\u00e9llo \U0001f600 \u4e16" .',
+    }
+    pages = spark.createDataFrame(
+        [fixtures._page_row(u, i, t)
+         for i, (u, t) in enumerate(texts.items())],
+        fixtures.PAGE_SCHEMA,
+    )
+    rows = doc_metrics(pages).collect()
+    assert sorted(r["url"] for r in rows) == sorted(texts)
+    m = {r["url"]: r for r in rows}
+    assert not m["u:broken"]["parse_ok"] and m["u:broken"]["error"]
+    assert m["u:broken"]["n_triples"] == 0
+    assert m["u:empty"]["text_sha1"] == hashlib.sha1(b"").hexdigest()
+    assert m["u:empty"]["n_chars"] == 0
+    utf8 = texts["u:utf8"]
+    assert m["u:utf8"]["n_chars"] == len(utf8) < len(utf8.encode("utf-8"))
+    assert m["u:utf8"]["text_sha1"] == hashlib.sha1(
+        utf8.encode("utf-8")).hexdigest()
+    good = {
+        r["url"]: r["count"]
+        for r in triples_only(extract_triples(pages))
+        .groupBy("url").count().collect()
+    }
+    for url, r in m.items():
+        assert r["n_triples"] == good.get(url, 0), url
+        assert r["parse_ok"] == (url != "u:broken")
+    assert good["u:utf8"] == 1
 
 
 def test_salted_bnode_labels_globally_unique(spark):

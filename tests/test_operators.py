@@ -2587,6 +2587,7 @@ def test_chunk_windows_is_codegen_only(spark):
     plan = plan_of(chunk_windows(docs, "doc_id", "text"))
     assert "Exchange" not in plan
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert "MapInArrow" not in plan
     assert "Generate" in plan  # the posexplode
 
 

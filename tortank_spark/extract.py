@@ -1,12 +1,20 @@
-"""Vectorized triple-extraction stage — the engine's "scan".
+"""Vectorized extraction stage — the engine's "scan".
 
-The whole reference parse pipeline (grammar rules P1-P24, SURVEY.md
-§2.2) runs as ONE Arrow-batched ``mapInPandas`` stage over the page
-table: state is document-scoped (prefix redefinition mid-doc,
-turtle_doc.rs:489-540) so a document is the natural unit of work, and
-documents are rows. Arrow moves batches JVM<->Python zero-copy; the
-per-doc parse is pure Python but amortized across 2k-row batches —
-there is no per-row Python UDF dispatch.
+Every per-page extractor runs as ONE Arrow-batched ``mapInArrow``
+stage over the page table, built by ``_arrow_stage``: the whole
+reference parse pipeline (grammar rules P1-P24, SURVEY.md §2.2) for
+Turtle, and the JSON-LD / RDFa / microdata / out-link scanners of the
+sibling modules. State is document-scoped (prefix redefinition
+mid-doc, turtle_doc.rs:489-540) so a document is the natural unit of
+work, and documents are rows. Arrow moves whole batches JVM<->Python
+and the output columns are built straight from python lists, with no
+pandas conversion on either side; the per-doc parse is pure Python
+but amortized across batches — there is no per-row Python UDF
+dispatch.
+
+``PARSERS`` is the per-page parser registry, one
+``fn(text, bnode_prefix) -> (triples, err)`` per syntax; each public
+entry point is the shared stage plus its own per-page row shape.
 
 Scale design (100 TB / 10^12 docs):
 * embarrassingly parallel — no shuffle; parallelism = input splits.
@@ -22,79 +30,114 @@ Scale design (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 import pyspark.sql.functions as F
 
 from .grammar.turtle import parse_document
-from .schema import DOC_METRICS_SCHEMA, EXTRACT_SCHEMA, TRIPLE_SCHEMA
+from .jsonld import extract_jsonld_triples
+from .microdata import extract_microdata_triples
+from .rdfa import extract_rdfa_triples
+from .schema import (DOC_METRICS_SCHEMA, EMBEDDED_SCHEMA, EXTRACT_SCHEMA,
+                     TRIPLE_COLS, TRIPLE_SCHEMA)
 
-_COLS = ["url", "s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang",
-         "parse_ok", "error"]
+PARSERS = {
+    "turtle": parse_document,
+    "jsonld": extract_jsonld_triples,
+    "rdfa": extract_rdfa_triples,
+    "microdata": extract_microdata_triples,
+}
+
+# extract_embedded's conservative per-syntax dispatch (guide §1.2
+# "per-task work"): each scanner can only ever emit when one of its
+# trigger tokens occurs somewhere in the page — JSON-LD islands need a
+# (case-insensitive) 'application/ld+json' script type, every RDFa
+# emission requires a property= or typeof= attribute, every microdata
+# emission an itemscope. A substring test over the lowered page is
+# exactly conservative (false positives just run the scanner and emit
+# nothing, false negatives are impossible), and skips 2-3 full HTML
+# scans on the typical single-syntax page. Turtle has no trigger: it
+# always runs.
+_TRIGGERS = {
+    "turtle": (),
+    "jsonld": ("ld+json",),
+    "rdfa": ("property", "typeof"),
+    "microdata": ("itemscope",),
+}
+
+_NO_TRIPLE = (None,) * len(TRIPLE_COLS)
 
 
 def _salt(url: str) -> str:
     return hashlib.sha1(url.encode("utf-8", "surrogatepass")).hexdigest()[:12] + "-"
 
 
-def _extract_batches(
-    batches, fixture_mode: bool,
-    seed_prefixes=None, well_known_prefix=None,
-):
-    """Arrow-native extraction stage: consumes pyarrow RecordBatches,
-    yields pyarrow RecordBatches (mapInArrow). Building ``pa.array``
-    columns directly skips BOTH pandas conversions the previous
-    mapInPandas shape paid (object-dtype DataFrame build + Spark's
-    pandas->Arrow serialize on yield; ~50 us/page measured on the
-    ~4 KB filler corpus — guide §4.2: hand whole batches to the
-    columnar layer, don't route them through pandas). Columnar
-    accumulation stays: one python list per output column beats a
-    list of 10-tuples by ~2x on array construction — this is the
-    per-triple hot path, measurably visible at 500k triples/batch."""
-    import pyarrow as pa
+def _arrow_stage(
+    pages: DataFrame, text_col: str, schema: StructType, page_rows,
+) -> DataFrame:
+    """pages -> (url, ``text_col``) -> ONE ``mapInArrow`` stage whose
+    output has ``schema``.
 
-    for rb in batches:
-        cols = {c: [] for c in _COLS}
-        ap = {c: cols[c].append for c in _COLS}
-        for url, text in zip(
-            rb.column(0).to_pylist(), rb.column(1).to_pylist()
-        ):
-            prefix = "" if fixture_mode else _salt(url)
-            triples, err = parse_document(
-                text or "", bnode_prefix=prefix,
-                seed_prefixes=seed_prefixes,
-                well_known_prefix=well_known_prefix,
-            )
-            if err is not None or not triples:
-                ap["url"](url)
-                ap["s"](None); ap["s_kind"](None); ap["p"](None)
-                ap["o"](None); ap["o_kind"](None)
-                ap["o_datatype"](None); ap["o_lang"](None)
-                ap["parse_ok"](err is None)
-                ap["error"](err)
-            else:
-                n = len(triples)
-                cols["url"].extend([url] * n)
-                cols["s"].extend(t[0] for t in triples)
-                cols["s_kind"].extend(t[1] for t in triples)
-                cols["p"].extend(t[2] for t in triples)
-                cols["o"].extend(t[3] for t in triples)
-                cols["o_kind"].extend(t[4] for t in triples)
-                cols["o_datatype"].extend(t[5] for t in triples)
-                cols["o_lang"].extend(t[6] for t in triples)
-                cols["parse_ok"].extend([True] * n)
-                cols["error"].extend([None] * n)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(cols[c], type=pa.bool_())
-                if c == "parse_ok"
-                else pa.array(cols[c], type=pa.string())
-                for c in _COLS
-            ],
-            _COLS,
-        )
+    ``page_rows(put, url, text)`` runs once per page (``text`` is never
+    None) and reports its output rows through
+    ``put(rows, head=(), tail=())``: each row becomes
+    ``head + row + tail``, in schema column order. Accumulation is
+    columnar — one python list per output column, extended column by
+    column, which beats a list of full row tuples by ~2x on array
+    construction; this is the per-triple hot path, measurably visible
+    at 500k triples/batch. Building ``pa.array`` columns directly skips
+    both pandas conversions a pandas-batched stage pays (~50 us/page
+    measured on the ~4 KB filler corpus — guide §4.2: hand whole
+    batches to the columnar layer, don't route them through pandas)."""
+    names = schema.fieldNames()
+
+    def run(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        types = [f.type for f in to_arrow_schema(schema)]
+        for rb in batches:
+            cols = [[] for _ in names]
+
+            def put(rows, head=(), tail=()):
+                n, k, m = len(rows), len(head), len(cols) - len(tail)
+                for c, v in zip(cols, head):
+                    c.extend([v] * n)
+                for j in range(m - k):
+                    cols[k + j].extend(r[j] for r in rows)
+                for c, v in zip(cols[m:], tail):
+                    c.extend([v] * n)
+
+            for url, text in zip(
+                rb.column(0).to_pylist(), rb.column(1).to_pylist()
+            ):
+                page_rows(put, url, text or "")
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=t) for c, t in zip(cols, types)], names)
+
+    # explicit pruning to the scan: only url + text are read
+    return pages.select("url", text_col).mapInArrow(run, schema=schema)
+
+
+def _extract_rows(
+    pages: DataFrame, parse, fixture_mode: bool, text_col: str = "text",
+) -> DataFrame:
+    """EXTRACT_SCHEMA rows of one per-page parser: one row per good
+    triple, or — for a page whose parse fails or yields nothing — one
+    quarantine row with a null triple, ``parse_ok = err is None`` and
+    the error."""
+
+    def page_rows(put, url, text):
+        triples, err = parse(
+            text, bnode_prefix="" if fixture_mode else _salt(url))
+        if err is not None or not triples:
+            put([_NO_TRIPLE], (url,), (err is None, err))
+        else:
+            put(triples, (url,), (True, None))
+
+    return _arrow_stage(pages, text_col, EXTRACT_SCHEMA, page_rows)
 
 
 def extract_triples(
@@ -114,12 +157,9 @@ def extract_triples(
     dicts ride the task closure; a huge external prefix table would use
     ``spark.sparkContext.broadcast`` instead.
     """
-    cols = pages.select("url", "text")  # explicit pruning to the scan
-    return cols.mapInArrow(
-        lambda it: _extract_batches(it, fixture_mode, seed_prefixes,
-                                    well_known_prefix),
-        schema=EXTRACT_SCHEMA,
-    )
+    parse = partial(parse_document, seed_prefixes=seed_prefixes,
+                    well_known_prefix=well_known_prefix)
+    return _extract_rows(pages, parse, fixture_mode)
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:
@@ -139,40 +179,13 @@ def doc_metrics(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     from those extraction rows instead (as pipeline._run_bucket does) —
     calling both doubles the parse CPU for nothing."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, text in zip(pdf["url"].values, pdf["text"].values):
-                text = text or ""
-                prefix = "" if fixture_mode else _salt(url)
-                triples, err = parse_document(text, bnode_prefix=prefix)
-                sha = hashlib.sha1(text.encode("utf-8", "surrogatepass")).hexdigest()
-                out.append(
-                    (url, err is None, len(triples), err, sha, len(text))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["url", "parse_ok", "n_triples", "error",
-                         "text_sha1", "n_chars"],
-            )
+    def page_rows(put, url, text):
+        triples, err = parse_document(
+            text, bnode_prefix="" if fixture_mode else _salt(url))
+        sha = hashlib.sha1(text.encode("utf-8", "surrogatepass")).hexdigest()
+        put([(url, err is None, len(triples), err, sha, len(text))])
 
-    return pages.select("url", "text").mapInPandas(gen, schema=DOC_METRICS_SCHEMA)
-
-
-_EMBEDDED_SCHEMA = None  # built lazily to avoid import-time Spark types
-
-
-def _embedded_schema():
-    global _EMBEDDED_SCHEMA
-    if _EMBEDDED_SCHEMA is None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        from .schema import TRIPLE_FIELDS
-
-        _EMBEDDED_SCHEMA = StructType(
-            [StructField("syntax", StringType(), False)] + TRIPLE_FIELDS
-        )
-    return _EMBEDDED_SCHEMA
+    return _arrow_stage(pages, "text", DOC_METRICS_SCHEMA, page_rows)
 
 
 def extract_embedded(
@@ -180,13 +193,14 @@ def extract_embedded(
 ) -> DataFrame:
     """Unified embedded-KG extraction — the north star's 'embedded
     RDFa/JSON-LD/Turtle in page text' as ONE operator. Every page is
-    scanned once and run through all four parsers (Turtle grammar,
+    scanned once and run through the four ``PARSERS`` (Turtle grammar,
     JSON-LD island expansion, RDFa-Lite attribute scan, HTML microdata
-    itemscope scan); the output is the union of each syntax's good
-    triples tagged with
-    ``syntax in ('turtle','jsonld','rdfa','microdata')``.
+    itemscope scan) whose trigger tokens it contains; the output is the
+    union of each syntax's good triples tagged with
+    ``syntax in ('turtle','jsonld','rdfa','microdata')``. A syntax's
+    triples are emitted iff its parser returned no error.
 
-    Single-pass by construction: one ``mapInPandas`` stage, so the
+    Single-pass by construction: one ``mapInArrow`` stage, so the
     page table is read ONCE (a DataFrame-level union of the four
     standalone extractors would scan 100 TB four times). A page may
     legitimately contribute triples in several syntaxes. Per-syntax
@@ -194,64 +208,15 @@ def extract_embedded(
     Turtle parse failure — so this operator emits good triples only;
     per-page parse auditing stays with the standalone extractors
     (extract_triples / jsonld.extract_jsonld / rdfa.extract_rdfa)."""
-    from .jsonld import _expand_island, find_islands
-    from .microdata import extract_microdata_triples
-    from .rdfa import extract_rdfa_triples
 
-    out_cols = ["syntax"] + _COLS[:8]
+    def page_rows(put, url, text):
+        prefix = "" if fixture_mode else _salt(url)
+        low = text.lower()
+        for syntax, parse in PARSERS.items():
+            trig = _TRIGGERS[syntax]
+            if not trig or any(t in low for t in trig):
+                triples, err = parse(text, bnode_prefix=prefix)
+                if err is None:
+                    put(triples, (syntax, url))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {c: [] for c in out_cols}
-
-            def add(syntax, url, ts):
-                k = len(ts)
-                if not k:
-                    return
-                cols["syntax"].extend([syntax] * k)
-                cols["url"].extend([url] * k)
-                for j, c in enumerate(_COLS[1:8]):
-                    cols[c].extend(t[j] for t in ts)
-
-            for url, text in zip(pdf["url"].values, pdf["_emb_text"].values):
-                text = text or ""
-                prefix = "" if fixture_mode else _salt(url)
-                t_ts, t_err = parse_document(text, bnode_prefix=prefix)
-                if t_err is None:
-                    add("turtle", url, t_ts)
-                # conservative per-syntax dispatch (guide §1.2 "per-
-                # task work"): each scanner can only ever emit when its
-                # trigger token occurs somewhere in the page — JSON-LD
-                # islands need a (case-insensitive) 'application/ld+
-                # json' script type, every RDFa emission requires a
-                # property= or typeof= attribute, every microdata
-                # emission an itemscope. A substring test over the
-                # lowered page is exactly conservative (false positives
-                # just run the scanner and emit nothing, false
-                # negatives are impossible), and skips 2-3 full HTML
-                # scans on the typical single-syntax page.
-                low = text.lower()
-                if "ld+json" in low:
-                    counter, j_ts, seen = 0, [], set()
-                    for payload in find_islands(text):
-                        ts, j_err, counter = _expand_island(
-                            payload, prefix, counter)
-                        if j_err is not None:
-                            j_ts = []
-                            break
-                        for t in ts:
-                            if t not in seen:
-                                seen.add(t)
-                                j_ts.append(t)
-                    add("jsonld", url, j_ts)
-                if "property" in low or "typeof" in low:
-                    r_ts, _ = extract_rdfa_triples(text, bnode_prefix=prefix)
-                    add("rdfa", url, r_ts)
-                if "itemscope" in low:
-                    m_ts, _ = extract_microdata_triples(
-                        text, bnode_prefix=prefix)
-                    add("microdata", url, m_ts)
-            yield pd.DataFrame(cols)
-
-    sel = pages.select("url", F.col(text_col).alias("_emb_text"))
-    return sel.mapInPandas(gen, schema=_embedded_schema())
+    return _arrow_stage(pages, text_col, EMBEDDED_SCHEMA, page_rows)

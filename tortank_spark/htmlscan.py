@@ -15,12 +15,15 @@ deliberately forgiving (double/single-quoted and bare attribute
 values) — crawl HTML is hostile, and a scanner that raises is a
 scanner that loses pages.
 
-rdfa.py keeps its own inline scanner on purpose: RDFa attributes are
-always valued, so it uses a stricter attribute grammar (``attr=value``
-required — a bare ``property`` attribute stays ABSENT rather than
-empty-string, which matters for its property-vs-typeof subject rules),
-whereas microdata REQUIRES bare boolean attributes (``itemscope``).
-The two grammars are a deliberate semantic split, not duplication.
+Bare attributes are the one grammar point where the extractors
+differ, so it is the caller's choice (``bare_attrs``): microdata
+REQUIRES bare boolean attributes (``itemscope``) and reads them as
+``''``, as weblinks does; RDFa attributes are always valued, so
+rdfa.py scans with ``bare_attrs=False`` and a bare ``property``
+stays ABSENT rather than empty-string, which matters for its
+property-vs-typeof subject rules (``<div property typeof="T">`` mints
+a blank-node subject, ``<div property="" typeof="T">`` keeps the
+parent's).
 """
 
 from __future__ import annotations
@@ -45,19 +48,24 @@ RAW_TEXT = {"script", "style"}
 WS_RE = re.compile(r"\s+")
 
 
-def parse_attrs(blob: str) -> dict[str, str]:
-    """Attribute blob -> {name: value}; bare boolean attributes (e.g.
-    ``itemscope``) map to ''."""
+def parse_attrs(blob: str, bare_attrs: bool = True) -> dict[str, str]:
+    """Attribute blob -> {name: value}; the last occurrence of a name
+    wins. Bare boolean attributes (e.g. ``itemscope``) map to '', or
+    are skipped when ``bare_attrs`` is False."""
     out = {}
     for m in ATTR_RE.finditer(blob or ""):
-        out[m.group(1).lower()] = m.group(2) or m.group(3) or m.group(4) or ""
+        if m.lastindex > 1:  # a quoted or unquoted value matched
+            out[m.group(1).lower()] = m.group(m.lastindex)
+        elif bare_attrs:
+            out[m.group(1).lower()] = ""
     return out
 
 
-def scan_html(html: str) -> Iterator[tuple]:
+def scan_html(html: str, bare_attrs: bool = True) -> Iterator[tuple]:
     """Yield ("start", tag, attrs, self_closing) / ("end", tag) /
     ("text", chunk) events. Never raises; balanced by construction —
-    every pushed start eventually yields exactly one end event."""
+    every pushed start eventually yields exactly one end event.
+    ``bare_attrs`` as in parse_attrs."""
     html = html or ""
     pos, n = 0, len(html)
     open_tags: list[str] = []
@@ -86,7 +94,7 @@ def scan_html(html: str) -> Iterator[tuple]:
                     if t == tag:
                         break
             continue
-        attrs = parse_attrs(m.group(3))
+        attrs = parse_attrs(m.group(3), bare_attrs)
         self_closing = bool(m.group(4)) or tag in VOID
         if tag in RAW_TEXT:
             yield ("start", tag, attrs, True)

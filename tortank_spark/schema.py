@@ -54,6 +54,12 @@ EXTRACT_SCHEMA = StructType(
     ]
 )
 
+# extract.extract_embedded: good triples tagged with the syntax that
+# produced them
+EMBEDDED_SCHEMA = StructType(
+    [StructField("syntax", StringType(), False)] + TRIPLE_FIELDS
+)
+
 # per-document extraction metrics (lineage/metrics table of the north
 # rule): one row per page
 DOC_METRICS_SCHEMA = StructType(

@@ -4,11 +4,12 @@ graph is what pagerank/harmonic/hits/kcore (graph.py) consume at web
 scale, and tortank has no analogue (single-document model); this is
 the Common-Crawl-style "web graph product" stage of the north rule.
 
-* ``extract_links``: one Arrow-batched ``mapInPandas`` stage over
-  (url, text|html) that runs the shared tag scanner (htmlscan.py) and
-  emits (url, href, rel, anchor) per ``<a href>`` — anchor text
-  whitespace-normalized like the RDFa text-content rule, nofollow
-  surfaced via ``rel`` so the ranking layer can weight it. Relative
+* ``extract_links``: the shared Arrow extraction stage (extract.py),
+  one ``mapInArrow`` stage over (url, text|html) that runs the shared
+  tag scanner (htmlscan.py) and emits (url, href, rel, anchor) per
+  ``<a href>`` — anchor text whitespace-normalized like the RDFa
+  text-content rule, nofollow surfaced via ``rel`` so the ranking
+  layer can weight it. Relative
   hrefs are resolved against the page url's scheme://host (path-level
   base/../ resolution is out of scope, documented); fragment-only and
   javascript:/mailto:/data: links are dropped.
@@ -24,11 +25,8 @@ celebrity host pair collapses map-side before the exchange.
 
 from __future__ import annotations
 
-import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -103,17 +101,11 @@ def extract_page_links(page_url: str, html: str) -> list[tuple]:
 
 def extract_links(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """pages(url, text|html, ...) -> (url, href, rel, anchor)."""
+    from .extract import _arrow_stage
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, text in zip(pdf["url"].values, pdf["_lk_text"].values):
-                rows.extend(extract_page_links(url, text))
-            yield pd.DataFrame(
-                rows, columns=["url", "href", "rel", "anchor"])
-
-    sel = pages.select("url", F.col(text_col).alias("_lk_text"))
-    return sel.mapInPandas(gen, schema=LINKS_SCHEMA)
+    return _arrow_stage(pages, text_col, LINKS_SCHEMA,
+                        lambda put, url, text: put(
+                            extract_page_links(url, text)))
 
 
 def _host(col):
