@@ -899,27 +899,28 @@ def _q_minhash_neardup(spark, sf_dir):
     the J=0.8 boundary (the corpus's single boundary pair is verified
     to collide under the shipped seed — deterministic, not a gamble),
     falling to ~4e-8 by J~0.9 and ~2e-12 at J=0.95."""
+    return _minhash_jaccard_ladder(spark, sf_dir, 0.5)
+
+
+def _minhash_jaccard_ladder(spark, sf_dir, threshold, finish=None):
+    """minhash signatures → banded LSH candidates →
+    dedup.jaccard_verify_pairs at ``threshold``, materialized with
+    every cache released; ``finish`` maps the verified pairs first.
+    The signature stage is persisted: it feeds both band self-join
+    sides."""
+    from tortank_spark.blocking import materialize
     from tortank_spark.dedup import (
-        lsh_candidate_pairs, minhash_signatures, ngram_jaccard_pairs,
+        jaccard_verify_pairs, lsh_candidate_pairs, minhash_signatures,
     )
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist: the signature stage feeds both sides of the band
-    # self-join; the candidate pairs feed the verify join plus both
-    # semi-join sides of the shingle narrowing. Materialize the small
-    # verified output, then release both caches (no leaked storage)
     sigs = minhash_signatures(docs, "doc_id").persist()
-    cand = lsh_candidate_pairs(sigs, "doc_id").persist()
-    try:
-        verified, shingle_cache = ngram_jaccard_pairs(
-            docs, cand, "doc_id", cache_shingles=True)
-        with shingle_cache:
-            return verified.filter(F.col("jaccard") >= 0.5).select(
-                "a", "b", F.round("jaccard", 4).alias("jaccard")
-            ).localCheckpoint(eager=True)
-    finally:
-        cand.unpersist()
-        sigs.unpersist()
+    pairs, caches = jaccard_verify_pairs(
+        docs, lsh_candidate_pairs(sigs, "doc_id"), "doc_id",
+        threshold=threshold, eager=False)
+    if finish is not None:
+        pairs = finish(pairs, docs)
+    return materialize(pairs, [sigs, caches], eager=True)
 
 
 def _q_minhash_verified(spark, sf_dir):
@@ -930,23 +931,7 @@ def _q_minhash_verified(spark, sf_dir):
     miss probability (1 - J^4)^16 with 16 bands x 4 rows: ~2e-4 at the
     J=0.8 boundary — the corpus's boundary pair collides under the
     shipped seed, deterministically — and ~4e-8 by J~0.9)."""
-    from tortank_spark.dedup import (
-        lsh_candidate_pairs, minhash_signatures, ngram_jaccard_pairs,
-    )
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    sigs = minhash_signatures(docs, "doc_id").persist()
-    cand = lsh_candidate_pairs(sigs, "doc_id").persist()
-    try:
-        verified, shingle_cache = ngram_jaccard_pairs(
-            docs, cand, "doc_id", cache_shingles=True)
-        with shingle_cache:
-            return verified.filter(F.col("jaccard") >= 0.8).select(
-                "a", "b", F.round("jaccard", 4).alias("jaccard")
-            ).localCheckpoint(eager=True)
-    finally:
-        cand.unpersist()
-        sigs.unpersist()
+    return _minhash_jaccard_ladder(spark, sf_dir, 0.8)
 
 
 def _q_zorder_key(spark, sf_dir):
@@ -1072,25 +1057,11 @@ def _q_dedup_clusters(spark, sf_dir):
     (dedup.dedup_clusters — composition of the LSH ladder and
     star-contraction CC). FULL value oracle: exact all-pairs Jaccard
     truth, recursive-CTE components, same min-id rule."""
-    from tortank_spark.dedup import (
-        dedup_clusters, lsh_candidate_pairs, minhash_signatures,
-        ngram_jaccard_pairs,
-    )
+    from tortank_spark.dedup import dedup_clusters
 
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    sigs = minhash_signatures(docs, "doc_id").persist()
-    cand = lsh_candidate_pairs(sigs, "doc_id").persist()
-    try:
-        pairs, shingle_cache = ngram_jaccard_pairs(
-            docs, cand, "doc_id", cache_shingles=True)
-        pairs = pairs.filter(F.col("jaccard") >= 0.8)
-        with shingle_cache:
-            return dedup_clusters(pairs, docs, "doc_id").localCheckpoint(
-                eager=True
-            )
-    finally:
-        cand.unpersist()
-        sigs.unpersist()
+    return _minhash_jaccard_ladder(
+        spark, sf_dir, 0.8,
+        finish=lambda pairs, docs: dedup_clusters(pairs, docs, "doc_id"))
 
 
 _ORACLE_DEDUP_CLUSTERS = r"""

@@ -1,6 +1,12 @@
 """Driver-style correctness check: run every queries() entry on Spark
 and its oracle_sql() twin on DuckDB over the same parquet dir; compare
-row count, column names, and an order-insensitive value hash."""
+row count, column names, and an order-insensitive value hash.
+
+Every ``ok`` line ends with ``spark_hash=<md5>``, the Spark side's
+value hash (rows-only queries included), so two runs — say before and
+after a refactor — compare with a plain diff of their ``ok`` lines.
+
+Usage: SF_DIR=<parquet table dir> python scripts/check_oracles.py [query ...]"""
 
 import hashlib
 import os
@@ -66,8 +72,10 @@ def main():
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             continue
         dt = time.time() - t0
+        sh = value_hash(scols, [[r[c] for c in scols] for r in srows])
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows, {dt:.1f}s)")
+            print(f"ok   {name}: rows-only ({len(srows)} rows, {dt:.1f}s)"
+                  f" spark_hash={sh}")
             continue
         try:
             drel = con.execute(oracles[name])
@@ -83,7 +91,6 @@ def main():
         if sorted(scols) != sorted(dcols):
             problems.append(f"cols {sorted(scols)} != {sorted(dcols)}")
         if not problems:
-            sh = value_hash(scols, [[r[c] for c in scols] for r in srows])
             dh = value_hash(dcols, drows)
             if sh != dh:
                 problems.append("value-hash mismatch")
@@ -102,7 +109,8 @@ def main():
             failures.append(name)
             print(f"FAIL {name}: {'; '.join(problems)}")
         else:
-            print(f"ok   {name}: {len(srows)} rows match ({dt:.1f}s)")
+            print(f"ok   {name}: {len(srows)} rows match ({dt:.1f}s)"
+                  f" spark_hash={sh}")
     print()
     if failures:
         print("FAILURES:", failures)

@@ -1218,6 +1218,47 @@ def test_rare_ngram_blocking_respects_df_cap(spark):
     assert got == {(100, 101)}
 
 
+def test_cap_blocks_and_pairs_from_blocks(spark):
+    """The blocking skeleton on a hand-built table: a one-row block
+    and an over-cap block pair nothing, ``min_block=1`` keeps
+    singletons, every pair is ordered a < b, and a pair appears once
+    per block its two ids share."""
+    from collections import Counter
+
+    from tortank_spark.blocking import cap_blocks, pairs_from_blocks
+
+    rows = spark.createDataFrame(
+        [("k1", 1), ("k1", 2), ("k1", 3),   # 3 pairs
+         ("k2", 2), ("k2", 1),              # (1, 2) again
+         ("solo", 4),                       # one-row block
+         ("hot", 5), ("hot", 6), ("hot", 7), ("hot", 8)],  # over cap 3
+        "key string, id long",
+    )
+    capped = cap_blocks(rows, "key", 3)
+    assert sorted({r["key"] for r in capped.collect()}) == ["k1", "k2"]
+    with_solo = cap_blocks(rows, "key", 3, min_block=1)
+    assert sorted({r["key"] for r in with_solo.collect()}) == [
+        "k1", "k2", "solo"]
+
+    got = Counter((r["a"], r["b"]) for r in pairs_from_blocks(
+        capped, "key", "id").collect())
+    assert got == Counter({(1, 2): 2, (1, 3): 1, (2, 3): 1})
+    # uncapped: the one-row block still emits nothing; the hot block
+    # emits C(4, 2) pairs — all ordered a < b
+    raw = Counter((r["a"], r["b"]) for r in pairs_from_blocks(
+        with_solo, "key", "id").collect())
+    assert raw == got
+    full = [(r["a"], r["b"]) for r in pairs_from_blocks(
+        rows, "key", "id").collect()]
+    assert all(a < b for a, b in full) and len(full) == 4 + 6
+    # a composite key blocks on the column tuple
+    two = rows.select(F.lit(0).alias("band"), F.col("key").alias("bucket"),
+                      "id")
+    assert Counter((r["a"], r["b"]) for r in pairs_from_blocks(
+        cap_blocks(two, ["band", "bucket"], 3), ["band", "bucket"],
+        "id").collect()) == got
+
+
 def test_ngram_jaccard_ladder_matches_allpairs_truth(spark):
     """The blocked ladder's output equals the EXACT all-pairs Jaccard
     truth at the threshold on the test corpus — certifies blocking

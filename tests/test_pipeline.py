@@ -248,3 +248,46 @@ def test_ensure_parallelism_fans_out_narrow_input_only(spark):
 
     wide = spark.range(1000).repartition(p)
     assert ensure_parallelism(wide) is wide
+
+
+def test_pipeline_manifest_commit_is_atomic(spark, tmp_path, monkeypatch):
+    """Markers commit by temp file + os.replace: a crash inside bucket
+    1's manifest rename leaves NO manifest (never a torn one that would
+    count as "bucket done"), so the resume re-runs bucket 1 and ends
+    with the same canonical table as a clean run. Pages are inline, so
+    the test needs no reference fixtures."""
+    import os
+
+    import pytest
+
+    from tortank_spark import pipeline
+
+    ex, same_as = "http://example.org/", "http://www.w3.org/2002/07/owl#sameAs"
+    pages = spark.createDataFrame(
+        [(f"{ex}page/{i}",
+          f'<{ex}e{i}> <{ex}p> "v{i}" .\n'
+          f"<{ex}e{i}> <{same_as}> <{ex}e{i % 5}> .\n")
+         for i in range(24)],
+        "url string, text string",
+    )
+    clean = run_pipeline(spark, pages, str(tmp_path / "clean"), n_buckets=2)
+
+    out = tmp_path / "crash"
+    real_replace, crashed = os.replace, []
+
+    def crash_once(src, dst):
+        if str(dst).endswith("bucket=1/_MANIFEST.json") and not crashed:
+            crashed.append(dst)
+            raise OSError("injected crash in the manifest rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(pipeline.os, "replace", crash_once)
+    with pytest.raises(OSError, match="injected crash"):
+        run_pipeline(spark, pages, str(out), n_buckets=2)
+    assert (out / "bucket=0" / "_MANIFEST.json").exists()
+    assert not (out / "bucket=1" / "_MANIFEST.json").exists()
+    assert not list((out / "bucket=1").glob("*.tmp"))
+
+    stats = run_pipeline(spark, pages, str(out), n_buckets=2)
+    assert stats["buckets_ran"] == [1] and stats["buckets_skipped"] == [0]
+    assert stats["n_canonical_triples"] == clean["n_canonical_triples"] > 0

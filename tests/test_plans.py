@@ -69,18 +69,38 @@ def test_top_revenue_broadcasts_dim_side(spark):
 
 
 @pytest.mark.parametrize("maker",
-                         ["minhash", "simhash", "embedding", "rare_ngram"])
+                         ["minhash", "simhash", "embedding", "rare_ngram",
+                          "winnow", "neighborhood_jaccard",
+                          "entity_cooccurrence", "fuzzy"])
 def test_candidate_generators_never_cross_join(spark, maker):
-    """Every near-dup candidate generator must be a bucketed equi-join;
-    a CartesianProduct or BroadcastNestedLoopJoin in the plan means the
-    operator silently degraded to all-pairs."""
-    from tortank_spark import dedup
+    """Every near-dup / co-reference candidate generator must be a
+    bucketed equi-join; a CartesianProduct or BroadcastNestedLoopJoin
+    in the plan means the operator silently degraded to all-pairs."""
+    from tortank_spark import dedup, linking, textops
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3}") for i in range(8)],
         "doc_id long, text string",
     )
-    if maker == "minhash":
+    handle = None
+    if maker == "winnow":
+        cand, handle = textops.winnow_dedup_pairs(docs, "doc_id",
+                                                  eager=False)
+    elif maker == "neighborhood_jaccard":
+        edges = spark.createDataFrame(
+            [(f"n{i}", f"m{i % 3}") for i in range(8)],
+            "src string, dst string")
+        cand = linking.neighborhood_jaccard(edges, max_df=5)
+    elif maker == "entity_cooccurrence":
+        links = spark.createDataFrame(
+            [(f"u{i % 3}", f"e{i}") for i in range(8)],
+            "url string, entity_iri string")
+        cand = linking.entity_cooccurrence(links)
+    elif maker == "fuzzy":
+        names = spark.createDataFrame(
+            [(i, f"name{i % 4}") for i in range(8)], "id long, name string")
+        cand = linking.fuzzy_pairs(names, "id", "name", max_df=6)
+    elif maker == "minhash":
         sigs = dedup.minhash_signatures(docs, "doc_id")
         cand = dedup.lsh_candidate_pairs(sigs, "doc_id")
     elif maker == "simhash":
@@ -93,10 +113,13 @@ def test_candidate_generators_never_cross_join(spark, maker):
             [(i, [float(i), 1.0, 0.5, float(i % 3)]) for i in range(8)],
             "vec_id long, embedding array<double>",
         )
-        cand = dedup.embedding_neardup_lsh(emb, threshold=0.99)
+        cand, handle = dedup.embedding_neardup_lsh(emb, threshold=0.99,
+                                                   eager=False)
     plan = plan_of(cand)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    if handle is not None:
+        handle.release()
 
 
 def test_ngram_verify_shingles_candidates_only(spark):
@@ -128,11 +151,17 @@ def test_ngram_verify_shingles_candidates_only(spark):
 
 
 def test_dedup_builders_release_their_caches(spark):
-    """minhash_dedup_pairs / embedding_neardup_lsh (eager default) must
-    unpersist their intermediate signature/bucket caches before
-    returning — only the small materialized output may stay pinned
-    (one localCheckpoint RDD per call)."""
-    from tortank_spark.dedup import embedding_neardup_lsh, minhash_dedup_pairs
+    """Every eager builder (the default) must unpersist its
+    intermediate signature / bucket / fingerprint / shingle / edge
+    caches before returning — only the small materialized output may
+    stay pinned (one localCheckpoint RDD per call)."""
+    from tortank_spark.dedup import (
+        embedding_neardup_lsh, minhash_dedup_pairs, ngram_jaccard_dedup_pairs,
+    )
+    from tortank_spark.graph import triangle_counts
+    from tortank_spark.textops import (
+        winnow_contamination, winnow_dedup_pairs, winnow_match_spans,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3}") for i in range(8)],
@@ -142,14 +171,30 @@ def test_dedup_builders_release_their_caches(spark):
         [(i, [float(i), 1.0, 0.5, float(i % 3)]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
+    evals = spark.createDataFrame([(0, "tok1 tok2 tok3 tok4")],
+                                  "eval_id long, text string")
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(5) for b in range(5) if a < b],
+        "src long, dst long",
+    )
+    builds = [
+        lambda: minhash_dedup_pairs(docs, "doc_id", threshold=0.5),
+        lambda: embedding_neardup_lsh(emb, threshold=0.99, dim=4),
+        lambda: winnow_dedup_pairs(docs, "doc_id", min_shared=1),
+        lambda: winnow_match_spans(docs, "doc_id", min_fps=1),
+        lambda: winnow_contamination(docs, evals, min_fps=1),
+        lambda: ngram_jaccard_dedup_pairs(docs, "doc_id", threshold=0.1),
+        lambda: triangle_counts(edges),
+    ]
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    minhash_dedup_pairs(docs, "doc_id", threshold=0.5).collect()
-    embedding_neardup_lsh(emb, threshold=0.99, dim=4).collect()
+    for build in builds:
+        build().collect()
     after = jsc.getPersistentRDDs().size()
-    assert after - before <= 2, (
+    assert after - before <= len(builds), (
         f"leaked intermediate caches: {after - before} new persistent "
-        f"RDDs after two eager dedup builds (expected <= 2 checkpoints)"
+        f"RDDs after {len(builds)} eager builds (expected <= "
+        f"{len(builds)} checkpoints)"
     )
 
 
@@ -320,7 +365,7 @@ def test_lazy_dedup_builders_persist_and_release_on_request(spark):
     filter/select derivation (ADVICE r04)."""
     from pyspark.sql import functions as F
 
-    from tortank_spark.dedup import minhash_dedup_pairs, release_caches
+    from tortank_spark.dedup import minhash_dedup_pairs
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3}") for i in range(8)],
@@ -345,8 +390,6 @@ def test_lazy_dedup_builders_persist_and_release_on_request(spark):
     handle.release()
     assert not (persistent_ids() & new_ids)
     handle.release()               # idempotent
-    release_caches(handle)         # helper accepts the handle...
-    release_caches((out, handle))  # ...or the whole result tuple
     # context-manager form releases on exit
     out2, h2 = minhash_dedup_pairs(docs, "doc_id", threshold=0.5,
                                    eager=False)
@@ -363,7 +406,6 @@ def test_winnow_span_generator_never_cross_joins(spark):
     candidate generator; a CartesianProduct/BroadcastNestedLoopJoin in
     the plan means it degraded to all-pairs. eager=False exposes the
     unreplayed plan (the eager path checkpoints)."""
-    from tortank_spark.dedup import release_caches
     from tortank_spark.textops import winnow_match_spans
 
     docs = spark.createDataFrame(
@@ -374,7 +416,7 @@ def test_winnow_span_generator_never_cross_joins(spark):
     plan = plan_of(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_caches(handle)
+    handle.release()
 
 
 def test_winnow_contamination_broadcasts_eval_side(spark):
@@ -382,7 +424,6 @@ def test_winnow_contamination_broadcasts_eval_side(spark):
     are MBs against a 100-TB corpus): the fp join must be a
     BroadcastHashJoin — a shuffled join here would shuffle the entire
     corpus fingerprint stream — and never a cross join."""
-    from tortank_spark.dedup import release_caches
     from tortank_spark.textops import winnow_contamination
 
     corpus = spark.createDataFrame(
@@ -398,7 +439,7 @@ def test_winnow_contamination_broadcasts_eval_side(spark):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_caches(handle)
+    handle.release()
 
 
 def test_triangle_counts_all_equi_joins(spark):
@@ -406,7 +447,6 @@ def test_triangle_counts_all_equi_joins(spark):
     wedge join on the shared low endpoint, closure probe) — a
     CartesianProduct/BroadcastNestedLoopJoin means the ordering guard
     slipped into the join condition instead of a post-join filter."""
-    from tortank_spark.dedup import release_caches
     from tortank_spark.graph import triangle_counts
 
     edges = spark.createDataFrame(
@@ -417,7 +457,7 @@ def test_triangle_counts_all_equi_joins(spark):
     plan = plan_of(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_caches(handle)
+    handle.release()
 
 
 def test_asof_join_single_exchange_no_range_join(spark):

@@ -10,9 +10,13 @@ Four tiers, cheapest first — the standard web-corpus dedup ladder:
    bits — banded by 16-bit chunks for candidate generation.
 4. verification: exact n-gram Jaccard on candidate pairs only.
 
-Scale notes: candidate generation is groupBy(bucket) + self-join within
-bucket — worst case quadratic per bucket, so bucket width (bands/rows)
-is the skew knob; AQE skew-join handles residual hot buckets. All
+Scale notes: every candidate generator is a blocking.py skeleton —
+rows (key, id) per band bucket / simhash key / plane bucket / rare
+shingle, optionally capped (``cap_blocks``), then the within-block
+self equi-join (``pairs_from_blocks``) — worst case quadratic per
+bucket, so bucket width (bands/rows) is the skew knob; AQE skew-join
+handles residual hot buckets. Builders that persist an intermediate
+return through ``blocking.materialize`` (the ``eager`` contract). All
 signatures are computed in one Arrow pandas stage over the text column.
 """
 
@@ -34,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .blocking import CacheHandle, cap_blocks, materialize, pairs_from_blocks
 from .textops import doc_fingerprint
 
 _TOKEN_RE = re.compile(r"\s+")
@@ -179,21 +184,7 @@ def lsh_candidate_pairs(
             )
         ).alias("band", "bucket"),
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b")
-        )
-        .distinct()
-    )
-    return pairs
+    return pairs_from_blocks(banded, ["band", "bucket"], id_col).distinct()
 
 
 def minhash_jaccard_estimate(
@@ -211,48 +202,6 @@ def minhash_jaccard_estimate(
     return j.select(
         "a", "b", (match / F.size("_sa")).alias("jaccard_est")
     )
-
-
-class CacheHandle:
-    """Explicit handle to the internal persisted dependencies of a
-    lazy (``eager=False``) dedup builder result. The builders persist
-    an intermediate (signatures / LSH buckets / fingerprints) that
-    feeds 2-3 plan branches; the plan node is unreachable from the
-    returned DataFrame, so the builder hands this handle back
-    alongside it: ``pairs, caches = minhash_dedup_pairs(..,
-    eager=False)``. Call :meth:`release` after the terminal action, or
-    use it as a context manager. Idempotent.
-
-    (Round-4 attached the dependency list as a Python attribute on the
-    returned DataFrame; any derived frame — filter/select/join —
-    silently lost it and release became a no-op, leaking the cache for
-    the session. An explicit handle survives arbitrary derivation —
-    ADVICE r04.)"""
-
-    def __init__(self, deps: list[DataFrame]):
-        self._deps = list(deps)
-
-    def release(self) -> None:
-        while self._deps:
-            self._deps.pop().unpersist()
-
-    def __enter__(self) -> "CacheHandle":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
-def release_caches(handle_or_result) -> None:
-    """Release the internal caches of a lazy dedup builder: accepts
-    the :class:`CacheHandle` itself or the whole ``(df, handle)``
-    result tuple. Idempotent."""
-    if isinstance(handle_or_result, CacheHandle):
-        handle_or_result.release()
-    elif isinstance(handle_or_result, tuple):
-        for x in handle_or_result:
-            if isinstance(x, CacheHandle):
-                x.release()
 
 
 def minhash_dedup_pairs(
@@ -275,25 +224,16 @@ def minhash_dedup_pairs(
     accumulate executor storage. With ``eager=False`` the plan stays
     lazy (use when you write the result out yourself in the same job)
     and the return value is a ``(pairs_df, CacheHandle)`` tuple —
-    call ``handle.release()`` (or :func:`release_caches`) after your
-    terminal action; the handle stays valid however the DataFrame is
-    further derived (the caller cannot reach the internal plan node
-    any other way)."""
+    call ``handle.release()`` after your terminal action; the handle
+    stays valid however the DataFrame is further derived (the caller
+    cannot reach the internal plan node any other way). Near-dup
+    pairs are orders of magnitude smaller than the corpus —
+    materializing them is how the cache gets released."""
     sigs = minhash_signatures(df, id_col, text_col, n_hashes).persist()
-    if not eager:
-        pairs = lsh_candidate_pairs(sigs, id_col, bands)
-        est = minhash_jaccard_estimate(sigs, pairs, id_col)
-        out = est.filter(F.col("jaccard_est") >= threshold)
-        return out, CacheHandle([sigs])
-    try:
-        pairs = lsh_candidate_pairs(sigs, id_col, bands)
-        est = minhash_jaccard_estimate(sigs, pairs, id_col)
-        out = est.filter(F.col("jaccard_est") >= threshold)
-        # near-dup pairs are orders of magnitude smaller than the
-        # corpus — materializing them is how the cache gets released
-        return out.localCheckpoint(eager=True)
-    finally:
-        sigs.unpersist()
+    pairs = lsh_candidate_pairs(sigs, id_col, bands)
+    est = minhash_jaccard_estimate(sigs, pairs, id_col)
+    return materialize(est.filter(F.col("jaccard_est") >= threshold),
+                       [sigs], eager)
 
 
 def simhash_signatures(
@@ -371,7 +311,10 @@ def simhash_candidate_pairs(
     expected bucket population O(n / 4e9) — the scale knob the round-1
     design lacked. Guarantee: hamming <= 3 differing bits touch <= 3 of
     the 6 blocks, so some untouched 3-block combination key is shared
-    (pigeonhole). The exact hamming filter runs on candidates only."""
+    (pigeonhole). The exact hamming filter runs on the distinct
+    candidates only, with ``simhash`` joined back onto each side —
+    ``sigs`` is read three times, so pass a persisted table when it
+    comes from the Python signature stage."""
     if max_hamming > 3:
         # the C(6,3) index is only COMPLETE for hamming <= 3: a pair
         # differing in 4+ bits can touch 4+ blocks and share no key —
@@ -399,28 +342,16 @@ def simhash_candidate_pairs(
          + F.lit(cid << 54)).cast("long")
         for cid, (i, j, k) in enumerate(_SIMHASH_COMBOS)
     ]
-    banded = sigs.select(
-        id_col, "simhash", F.explode(F.array(*keys)).alias("key")
-    )
-    l, r = banded.alias("l"), banded.alias("r")
+    banded = sigs.select(id_col, F.explode(F.array(*keys)).alias("key"))
+    cand = pairs_from_blocks(banded, "key", id_col).distinct()
+    sa = sigs.select(F.col(id_col).alias("a"), F.col("simhash").alias("_ha"))
+    sb = sigs.select(F.col(id_col).alias("b"), F.col("simhash").alias("_hb"))
+    hamming = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
     return (
-        l.join(
-            r,
-            (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("a"),
-            F.col(f"r.{id_col}").alias("b"),
-            _hamming64(F.col("l.simhash"), F.col("r.simhash")).alias("hamming"),
-        )
-        .distinct()
+        cand.join(sa, "a").join(sb, "b")
+        .select("a", "b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
-
-
-def _hamming64(x, y):
-    return F.bit_count(x.bitwiseXOR(y))
 
 
 def _cosine_pair_sides(emb: DataFrame, id_col: str, vec_col: str):
@@ -480,9 +411,8 @@ def embedding_neardup_lsh(
     the return value is a ``(pairs_df, CacheHandle)`` tuple — call
     ``handle.release()`` after your terminal action (see
     minhash_dedup_pairs)."""
-    from .similarity import _table_planes
+    from .similarity import _stacked_planes, _table_buckets
 
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
     schema = StructType(
         [
             StructField(id_col, emb.schema[id_col].dataType, False),
@@ -490,12 +420,8 @@ def embedding_neardup_lsh(
         ]
     )
 
-    def _planes(d: int) -> np.ndarray:
-        return np.concatenate(
-            [_table_planes(d, n_bits, t) for t in range(n_tables)], axis=0
-        )
-
-    planes0 = _planes(dim) if dim is not None else None
+    planes0 = (_stacked_planes(dim, n_bits, n_tables)
+               if dim is not None else None)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = planes0
@@ -506,34 +432,19 @@ def embedding_neardup_lsh(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
             )
             if planes is None:  # seeded -> identical across all tasks
-                planes = _planes(mat.shape[1])
-            bits = (mat @ planes.T).reshape(len(mat), n_tables, n_bits) > 0
-            buckets = (bits.astype(np.int64) * weights).sum(axis=2)
+                planes = _stacked_planes(mat.shape[1], n_bits, n_tables)
+            buckets = _table_buckets(mat, planes, n_bits)
             # disjoint key space per table: key = table * 2^b + bucket
             keys = buckets + (np.arange(n_tables, dtype=np.int64) << n_bits)
             ids = np.repeat(pdf[id_col].values, n_tables)
             yield pd.DataFrame({id_col: ids, "key": keys.ravel()})
 
-    # NOTE: similarity.lsh_multitable_candidates shares the same
-    # stacked-planes signature math but serves a query-vs-corpus probe
-    # (boolean hit per row); this variant emits JOINABLE (id, key) rows
-    # for the all-pairs case — keep the two in sync when changing the
-    # plane seeding or key layout (_table_planes is the shared piece).
     # persist: the banded keys feed both sides of the self-join —
     # uncached, the Python bucketing stage runs twice
     banded = emb.select(id_col, vec_col).mapInPandas(
         gen, schema=schema
     ).persist()
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-        .distinct()
-    )
+    cand = pairs_from_blocks(banded, "key", id_col).distinct()
     # exact cosine on CANDIDATES only (two hash joins + codegen math)
     va, vb, cos = _cosine_pair_sides(emb, id_col, vec_col)
     out = (
@@ -542,12 +453,7 @@ def embedding_neardup_lsh(
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", F.round("cosine", 6).alias("cosine"))
     )
-    if not eager:
-        return out, CacheHandle([banded])
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        banded.unpersist()
+    return materialize(out, [banded], eager)
 
 
 def _shingles_expr(text_col: str, n: int):
@@ -647,18 +553,8 @@ def rare_ngram_candidate_pairs(
     posts = df.select(
         F.col(id_col), F.explode(_shingles_expr(text_col, n)).alias("gram")
     )
-    rare = posts.groupBy("gram").agg(F.count("*").alias("_df")).filter(
-        (F.col("_df") >= 2) & (F.col("_df") <= max_df)
-    ).select("gram")
-    rp = posts.join(rare, "gram", "semi")
-    x = rp.select(F.col("gram"), F.col(id_col).alias("a"))
-    y = rp.select(F.col("gram"), F.col(id_col).alias("b"))
-    return (
-        x.join(y, "gram")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    rare = cap_blocks(posts, "gram", max_df)
+    return pairs_from_blocks(rare, "gram", id_col).distinct()
 
 
 def ngram_jaccard_dedup_pairs(
@@ -675,20 +571,29 @@ def ngram_jaccard_dedup_pairs(
     returns ``(df, CacheHandle)`` (see minhash_dedup_pairs)."""
     cand = rare_ngram_candidate_pairs(
         df, id_col, text_col=text_col, n=n, max_df=max_df
-    ).persist()
+    )
+    return jaccard_verify_pairs(df, cand, id_col, text_col=text_col, n=n,
+                                threshold=threshold, eager=eager)
+
+
+def jaccard_verify_pairs(
+    df: DataFrame, cand: DataFrame, id_col: str, text_col: str = "text",
+    n: int = 3, threshold: float = 0.5, eager: bool = True,
+):
+    """The verify half of every Jaccard dedup ladder: persist the
+    candidate pairs (they feed the pair join and both semi-join sides
+    of the shingle narrowing) → exact n-gram Jaccard with the shingled
+    candidate table cached (``ngram_jaccard_pairs``) → keep pairs at
+    ``jaccard >= threshold`` → (a, b, jaccard rounded to 4 places) →
+    ``blocking.materialize`` with both caches."""
+    cand = cand.persist()
     verified, shingle_cache = ngram_jaccard_pairs(
         df, cand, id_col, text_col=text_col, n=n, cache_shingles=True
     )
     out = verified.filter(F.col("jaccard") >= threshold).select(
         "a", "b", F.round("jaccard", 4).alias("jaccard")
     )
-    if not eager:
-        return out, CacheHandle([cand, *shingle_cache._deps])
-    try:
-        with shingle_cache:
-            return out.localCheckpoint(eager=True)
-    finally:
-        cand.unpersist()
+    return materialize(out, [cand, shingle_cache], eager)
 
 
 def dedup_clusters(

@@ -12,12 +12,19 @@ url. No Python in the hot path.
 Output: (url, mention, entity_iri, score) candidate links, plus
 ``links_as_triples`` to lift accepted links into the triple table as
 ex:mentions edges.
+
+The co-reference / relation candidate generators (entity
+co-occurrence, neighbourhood Jaccard, fuzzy name pairs) are
+blocking.py skeletons: ``cap_blocks`` is their ``max_df`` cap and
+``pairs_from_blocks`` their within-block ``a < b`` self-join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+
+from .blocking import cap_blocks, pairs_from_blocks
 
 MENTIONS_PRED = "http://tortank-spark.dev/ns#mentions"
 
@@ -91,11 +98,9 @@ def entity_cooccurrence(
     so the url join key cannot produce a celebrity-size group; the
     aggregate is map-side partial. No Python anywhere."""
     de = links.select("url", "entity_iri").distinct()
-    a = de.select("url", F.col("entity_iri").alias("e1"))
-    b = de.select("url", F.col("entity_iri").alias("e2"))
     return (
-        a.join(b, "url")
-        .filter(F.col("e1") < F.col("e2"))
+        pairs_from_blocks(de, "url", "entity_iri")
+        .toDF("e1", "e2")
         .groupBy("e1", "e2")
         .agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
@@ -138,18 +143,12 @@ def neighborhood_jaccard(
         .distinct()
     )
     if max_df is not None:
-        rare = (
-            e.groupBy("dst").agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_df)
-            .select("dst")
-        )
-        e = e.join(rare, "dst", "left_semi")
+        # min_block=1: a fan-in-1 neighbour pairs nothing but still
+        # counts toward its source's degree
+        e = cap_blocks(e, "dst", max_df, min_block=1)
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    a = e.select(F.col("src").alias("a"), "dst")
-    b = e.select(F.col("src").alias("b"), "dst")
     pairs = (
-        a.join(b, "dst")
-        .filter(F.col("a") < F.col("b"))
+        pairs_from_blocks(e, "dst", "src")
         .groupBy("a", "b")
         .agg(F.count("*").alias("common"))
         .filter(F.col("common") >= min_common)
@@ -212,12 +211,9 @@ def fuzzy_pairs(
         F.explode(F.array_union(F.array(F.col("_n")), dels)).alias("_k"),
     )
     if max_df is not None:
-        ok = (
-            keys.groupBy("_k").agg(F.count("*").alias("_c"))
-            .filter(F.col("_c") <= max_df)
-            .select("_k")
-        )
-        keys = keys.join(ok, "_k", "left_semi")
+        keys = cap_blocks(keys, "_k", max_df)
+    # its own join, not pairs_from_blocks: the pairs carry names, and
+    # a name is not a function of the id
     a = keys.select(F.col("_id").alias("a_id"),
                     F.col("_n").alias("a_name"), "_k")
     b = keys.select(F.col("_id").alias("b_id"),

@@ -46,6 +46,21 @@ def bucket_of(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
 
+def _write_marker(path: Path, obj: dict, indent: int | None = None) -> None:
+    """Commit a JSON marker atomically: write a temp file in the same
+    directory, then ``os.replace`` it over ``path``. A crash leaves
+    either the old marker or the new one, never a torn file — a torn
+    _LAYOUT.json / _GLOBAL.json would fail every later resume, and a
+    torn _MANIFEST.json would still count as "bucket done"."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name(f".{path.name}.{uuid.uuid4().hex}.tmp")
+    try:
+        tmp.write_text(json.dumps(obj, indent=indent))
+        os.replace(tmp, path)
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
 def _manifest_key(out: Path, n_buckets: int) -> str:
     """Content hash over the full ordered set of bucket manifests —
     the resume key for the global canonicalization phase. Any bucket
@@ -116,7 +131,7 @@ def run_pipeline(
         # layout write would leave a committed table with no layout,
         # letting a later resume with a different n_buckets slip past
         # the guard above
-        layout_file.write_text(json.dumps({"n_buckets": n_buckets}))
+        _write_marker(layout_file, {"n_buckets": n_buckets})
     if not (pages_dir / "_SUCCESS").exists():
         (
             pages.withColumn("_bucket", bucket_of(F.col("url"), n_buckets))
@@ -139,11 +154,9 @@ def run_pipeline(
         # leave a stale triples_canonical behind a matching resume key
         run_id = uuid.uuid4().hex
         if not bpath.exists():  # bucket got no pages: nothing to do
-            manifest.parent.mkdir(parents=True, exist_ok=True)
-            manifest.write_text(json.dumps(
-                {"docs": 0, "triples": 0, "parse_failures": 0,
-                 "run_id": run_id}, indent=1
-            ))
+            _write_marker(manifest, {"docs": 0, "triples": 0,
+                                     "parse_failures": 0,
+                                     "run_id": run_id}, indent=1)
             ran.append(b)
             continue
         bucket_pages = spark.read.parquet(str(bpath))
@@ -156,7 +169,7 @@ def run_pipeline(
             syntax_mode,
         )
         stats["run_id"] = run_id
-        manifest.write_text(json.dumps(stats, indent=1))
+        _write_marker(manifest, stats, indent=1)
         ran.append(b)
     # global canonicalization over the union of bucket edge sidecars.
     # Resume guard: the phase is keyed to the full set of bucket
@@ -205,10 +218,10 @@ def run_pipeline(
 
         write_triples_pbucketed(canonical, str(canon_dir))
         n_triples = int(canon_obs.get["n"])
-        global_file.write_text(json.dumps({
+        _write_marker(global_file, {
             "manifest_key": manifest_key,
             "n_canonical_triples": n_triples,
-        }))
+        })
     wall = time.time() - t0
     run_stats = {
         "buckets_total": n_buckets,
@@ -218,7 +231,7 @@ def run_pipeline(
         "n_canonical_triples": n_triples,
         "wall_sec": round(wall, 3),
     }
-    (out / "_RUN.json").write_text(json.dumps(run_stats, indent=1))
+    _write_marker(out / "_RUN.json", run_stats, indent=1)
     return run_stats
 
 
@@ -231,66 +244,67 @@ def _run_bucket(
     syntax_mode: str = "turtle",
 ) -> dict:
     pages = pages.persist()
-    if syntax_mode == "embedded":
-        emb = extract_embedded(pages).persist()
-        triples = emb.select(
-            "url", "s", "s_kind", "p", "o", "o_kind",
-            "o_datatype", "o_lang",
-        ).distinct()  # a triple may arrive via two syntaxes; the
-        # canonical table is a set, per the reference's statement dedup
-        extracted = None
-    else:
-        extracted = extract_triples(pages).persist()
-        triples = triples_only(extracted)
+    cached = [pages]
+    try:
+        if syntax_mode == "embedded":
+            emb = extract_embedded(pages).persist()
+            cached.append(emb)
+            triples = emb.select(
+                "url", "s", "s_kind", "p", "o", "o_kind",
+                "o_datatype", "o_lang",
+            ).distinct()  # a triple may arrive via two syntaxes; the
+            # canonical table is a set, per the reference's statement dedup
+        else:
+            extracted = extract_triples(pages).persist()
+            cached.append(extracted)
+            triples = triples_only(extracted)
 
-    link_triples = None
-    if alias_dict is not None:
-        mentions = detect_mentions(pages)
-        links = best_link_per_mention(
-            link_mentions(mentions, alias_dict, min_link_score)
-        )
-        link_triples = links_as_triples(links)
-        all_triples = triples.unionByName(link_triples)
-    else:
-        all_triples = triples
-
-    all_triples.write.mode("overwrite").parquet(f"{bdir}/triples")
-    sameas_edges(triples).write.mode("overwrite").parquet(
-        f"{bdir}/sameas_edges"
-    )
-    # lineage: url -> bucket + per-doc counts + parse status. The
-    # embedded extractor emits good triples only (no quarantine rows),
-    # so its lineage left-joins the full page set back in: EVERY page
-    # gets a row, zero-markup pages as (0, true, null).
-    if syntax_mode == "embedded":
-        lineage = (
-            pages.select("url").distinct()
-            .join(triples.groupBy("url").agg(
-                F.count("*").alias("n_triples")), "url", "left")
-            .select(
-                "url",
-                F.coalesce(F.col("n_triples"), F.lit(0)).alias("n_triples"),
-                F.lit(True).alias("parse_ok"),
-                F.lit(None).cast("string").alias("error"),
+        link_triples = None
+        if alias_dict is not None:
+            mentions = detect_mentions(pages)
+            links = best_link_per_mention(
+                link_mentions(mentions, alias_dict, min_link_score)
             )
+            link_triples = links_as_triples(links)
+            all_triples = triples.unionByName(link_triples)
+        else:
+            all_triples = triples
+
+        all_triples.write.mode("overwrite").parquet(f"{bdir}/triples")
+        sameas_edges(triples).write.mode("overwrite").parquet(
+            f"{bdir}/sameas_edges"
         )
-    else:
-        lineage = extracted.groupBy("url").agg(
-            F.sum(F.when(F.col("s").isNotNull(), 1).otherwise(0)).alias("n_triples"),
-            F.min(F.col("parse_ok").cast("int")).cast("boolean").alias("parse_ok"),
-            F.first("error", ignorenulls=True).alias("error"),
-        )
-    lineage.write.mode("overwrite").parquet(f"{bdir}/lineage")
-    agg = lineage.agg(
-        F.count("*").alias("docs"),
-        F.sum("n_triples").alias("triples"),
-        F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("parse_failures"),
-    ).collect()[0]
-    pages.unpersist()
-    if extracted is not None:
-        extracted.unpersist()
-    else:
-        emb.unpersist()
+        # lineage: url -> bucket + per-doc counts + parse status. The
+        # embedded extractor emits good triples only (no quarantine rows),
+        # so its lineage left-joins the full page set back in: EVERY page
+        # gets a row, zero-markup pages as (0, true, null).
+        if syntax_mode == "embedded":
+            lineage = (
+                pages.select("url").distinct()
+                .join(triples.groupBy("url").agg(
+                    F.count("*").alias("n_triples")), "url", "left")
+                .select(
+                    "url",
+                    F.coalesce(F.col("n_triples"), F.lit(0)).alias("n_triples"),
+                    F.lit(True).alias("parse_ok"),
+                    F.lit(None).cast("string").alias("error"),
+                )
+            )
+        else:
+            lineage = extracted.groupBy("url").agg(
+                F.sum(F.when(F.col("s").isNotNull(), 1).otherwise(0)).alias("n_triples"),
+                F.min(F.col("parse_ok").cast("int")).cast("boolean").alias("parse_ok"),
+                F.first("error", ignorenulls=True).alias("error"),
+            )
+        lineage.write.mode("overwrite").parquet(f"{bdir}/lineage")
+        agg = lineage.agg(
+            F.count("*").alias("docs"),
+            F.sum("n_triples").alias("triples"),
+            F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("parse_failures"),
+        ).collect()[0]
+    finally:
+        for df in cached:
+            df.unpersist()
     return {
         "docs": agg["docs"],
         "triples": int(agg["triples"] or 0),

@@ -142,6 +142,24 @@ def _table_planes(dim: int, n_bits: int, table: int) -> np.ndarray:
     return _hyperplanes(dim, n_bits, seed=7 + 31 * table)
 
 
+def _stacked_planes(dim: int, n_bits: int, n_tables: int) -> np.ndarray:
+    """The (n_tables * n_bits, dim) plane matrix of L seeded tables."""
+    return np.concatenate(
+        [_table_planes(dim, n_bits, t) for t in range(n_tables)], axis=0
+    )
+
+
+def _table_buckets(mat: np.ndarray, planes: np.ndarray,
+                   n_bits: int) -> np.ndarray:
+    """(rows, tables) bucket ids of the row vectors ``mat`` under
+    ``_stacked_planes``: one matmul, then each table's ``n_bits`` sign
+    bits packed into an int (bit i = plane i of that table). Shared by
+    the query-vs-corpus probe below and dedup.embedding_neardup_lsh."""
+    bits = (mat @ planes.T).reshape(len(mat), -1, n_bits) > 0
+    weights = 1 << np.arange(n_bits, dtype=np.int64)
+    return (bits.astype(np.int64) * weights).sum(axis=2)
+
+
 def lsh_multitable_candidates(
     df: DataFrame, vec_col: str, query: list,
     n_bits: int = 4, n_tables: int = 12, id_col: str = "vec_id",
@@ -153,14 +171,9 @@ def lsh_multitable_candidates(
     (L*b, dim) plane matrix per Arrow batch). At scale each table's
     bucket column is a partition key; b grows with log(n) and L is the
     recall knob."""
-    dim = len(query)
     qv = np.asarray(query, dtype=np.float64)
-    all_planes = np.concatenate(
-        [_table_planes(dim, n_bits, t) for t in range(n_tables)], axis=0
-    )
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
-    qbits = (all_planes @ qv).reshape(n_tables, n_bits) > 0
-    qbuckets = (qbits.astype(np.int64) * weights).sum(axis=1)
+    all_planes = _stacked_planes(len(query), n_bits, n_tables)
+    qbuckets = _table_buckets(qv[None, :], all_planes, n_bits)[0]
 
     schema = StructType(
         [StructField(id_col, df.schema[id_col].dataType, False)]
@@ -171,8 +184,7 @@ def lsh_multitable_candidates(
             mat = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
             )
-            bits = (mat @ all_planes.T).reshape(len(mat), n_tables, n_bits) > 0
-            buckets = (bits.astype(np.int64) * weights).sum(axis=2)
+            buckets = _table_buckets(mat, all_planes, n_bits)
             hit = (buckets == qbuckets).any(axis=1)
             yield pd.DataFrame({id_col: pdf[id_col].values[hit]})
 

@@ -6,6 +6,11 @@ Everything except language-ID is pure column expressions (JVM,
 whole-stage codegen). Language-ID is an Arrow-batched pandas UDF using
 a tiny built-in stopword profile — the classic n-gram/stopword
 heuristic, no external models.
+
+The winnow near-dup family (pairs, match spans, contamination) is
+built on blocking.py: fingerprints are the blocks, ``cap_blocks`` is
+the ``max_df`` cap, ``pairs_from_blocks`` the fp self-join and
+``materialize`` the ``eager`` cache contract.
 """
 
 from __future__ import annotations
@@ -13,9 +18,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from .blocking import cap_blocks, materialize, pairs_from_blocks
 
 _WS = r"\s+"
 
@@ -329,40 +336,58 @@ def winnow_dedup_pairs(
     table feeds the df-cap aggregate AND both self-join sides, so it
     is always persisted; ``eager`` (default) materializes the small
     pair output and releases it, ``eager=False`` returns a
-    ``(pairs_df, dedup.CacheHandle)`` tuple — call
+    ``(pairs_df, blocking.CacheHandle)`` tuple — call
     ``handle.release()`` after the terminal action."""
-    from .dedup import CacheHandle
-
     # per-doc-distinct (id, fp) straight from the numpy stage: set-
     # equal to winnow_fingerprints().select(id, fp).distinct() but
     # without shipping positions over Arrow or paying the distinct's
     # full shuffle (rows are already unique within a doc, and (id, fp)
     # rows from different docs can never collide)
     fps = winnow_doc_fingerprint_set(df, id_col, text_col, k, w).persist()
-    # df >= 2 is a pure prune: a fingerprint seen in ONE document can
+    # min_block=2 is a pure prune: a fingerprint seen in ONE document can
     # never witness a pair (the self-join needs a < b within the same
     # fp), and singleton fps are the vast majority of a real corpus
     # (~4.2M of 4.2M rows at sf1.0 minus a few hundred) — dropping
     # them BEFORE the equi-join removes almost the entire sort-merge
     # input (guide §3.2: reduce the big side before shuffling it)
-    rare = fps.groupBy("fp").agg(F.count("*").alias("_df")).filter(
-        (F.col("_df") >= 2) & (F.col("_df") <= max_df)
-    ).select("fp")
-    narrowed = fps.join(rare, "fp")
-    l = narrowed.select(F.col(id_col).alias("a"), "fp")
-    r = narrowed.select(F.col(id_col).alias("b"), "fp")
     out = (
-        l.join(r, (l["fp"] == r["fp"]) & (F.col("a") < F.col("b")))
+        pairs_from_blocks(cap_blocks(fps, "fp", max_df), "fp", id_col)
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    if not eager:
-        return out, CacheHandle([fps])
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        fps.unpersist()
+    return materialize(out, [fps], eager)
+
+
+def _islands(shared: DataFrame, a: str, b: str, max_gap: int,
+             min_fps: int) -> DataFrame:
+    """Gaps-and-islands over shared positions ``(a, b, pos)``: per
+    (a, b), consecutive positions at most ``max_gap`` apart form one
+    island (a running sum of gap breaks over one window, whole-stage
+    codegen'd); islands with at least ``min_fps`` positions become
+    ``(a, b, a_start, a_end, n_fps)`` rows."""
+    win = Window.partitionBy(a, b).orderBy("pos")
+    islands = shared.withColumn(
+        "_brk",
+        F.when(
+            F.col("pos") - F.lag("pos").over(win) > max_gap, 1
+        ).otherwise(0),
+    ).withColumn(
+        "_isl",
+        F.sum("_brk").over(
+            win.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+    return (
+        islands.groupBy(a, b, "_isl")
+        .agg(
+            F.min("pos").alias("a_start"),
+            F.max("pos").alias("a_end"),
+            F.count("*").alias("n_fps"),
+        )
+        .filter(F.col("n_fps") >= min_fps)
+        .select(a, b, "a_start", "a_end", "n_fps")
+    )
 
 
 def winnow_match_spans(
@@ -395,59 +420,29 @@ def winnow_match_spans(
     join, and the same window arithmetic). Cache lifetime follows
     winnow_dedup_pairs: ``eager`` (default) materializes the small
     span output and releases the fingerprint cache; ``eager=False``
-    returns ``(spans_df, dedup.CacheHandle)``."""
-    from pyspark.sql import Window
-
-    from .dedup import CacheHandle
-
+    returns ``(spans_df, blocking.CacheHandle)``."""
     fps = (
         winnow_fingerprints(df, id_col, text_col, k, w)
         .select(id_col, "pos", "fp").distinct().persist()
     )
-    # _df >= 2 is a pure prune (same argument as winnow_dedup_pairs):
+    # min_block=2 is a pure prune (same argument as winnow_dedup_pairs):
     # a single-row fingerprint cannot appear in two documents, so it
     # can never contribute a shared span; singleton fps dominate the
-    # positioned table and would otherwise flow through both join sides
-    rare = fps.groupBy("fp").agg(F.count("*").alias("_df")).filter(
-        (F.col("_df") >= 2) & (F.col("_df") <= max_df)
-    ).select("fp")
-    nar = fps.join(rare, "fp")
+    # positioned table and would otherwise flow through both join
+    # sides. The cap counts POSITIONED rows, not documents, and the
+    # join is (a, pos) x distinct (b, fp), not pairs_from_blocks: the
+    # a-side must keep its positions.
+    nar = cap_blocks(fps, "fp", max_df)
     left = nar.select(F.col(id_col).alias("a"), "pos", "fp")
     right = nar.select(F.col(id_col).alias("b"), "fp").distinct()
     shared = (
-        left.join(right, (left["fp"] == right["fp"])
-                  & (F.col("a") < F.col("b")))
+        left.join(right, "fp")
+        .filter(F.col("a") < F.col("b"))
         .select("a", "b", "pos")
         .distinct()
     )
-    win = Window.partitionBy("a", "b").orderBy("pos")
-    islands = shared.withColumn(
-        "_brk",
-        F.when(
-            F.col("pos") - F.lag("pos").over(win) > max_gap, 1
-        ).otherwise(0),
-    ).withColumn(
-        "_isl",
-        F.sum("_brk").over(
-            win.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    out = (
-        islands.groupBy("a", "b", "_isl")
-        .agg(
-            F.min("pos").alias("a_start"),
-            F.max("pos").alias("a_end"),
-            F.count("*").alias("n_fps"),
-        )
-        .filter(F.col("n_fps") >= min_fps)
-        .select("a", "b", "a_start", "a_end", "n_fps")
-    )
-    if not eager:
-        return out, CacheHandle([fps])
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        fps.unpersist()
+    return materialize(_islands(shared, "a", "b", max_gap, min_fps),
+                       [fps], eager)
 
 
 def winnow_contamination(
@@ -472,18 +467,11 @@ def winnow_contamination(
 
     Deterministic and fully SQL-replayable; `tests/test_plans.py`
     pins the broadcast (BroadcastHashJoin, no cross join)."""
-    from pyspark.sql import Window
-
-    from .dedup import CacheHandle
-
     cfps = (
         winnow_fingerprints(corpus, id_col, text_col, k, w)
         .select(id_col, "pos", "fp").distinct().persist()
     )
-    rare = cfps.groupBy("fp").agg(F.count("*").alias("_df")).filter(
-        F.col("_df") <= max_df
-    ).select("fp")
-    nar = cfps.join(rare, "fp")
+    nar = cap_blocks(cfps, "fp", max_df, min_block=1)
     efps = (
         winnow_fingerprints(eval_df, eval_id_col, text_col, k, w)
         .select(eval_id_col, "fp").distinct()
@@ -493,34 +481,9 @@ def winnow_contamination(
         .select(id_col, eval_id_col, "pos")
         .distinct()
     )
-    win = Window.partitionBy(id_col, eval_id_col).orderBy("pos")
-    islands = shared.withColumn(
-        "_brk",
-        F.when(
-            F.col("pos") - F.lag("pos").over(win) > max_gap, 1
-        ).otherwise(0),
-    ).withColumn(
-        "_isl",
-        F.sum("_brk").over(
-            win.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    out = (
-        islands.groupBy(id_col, eval_id_col, "_isl")
-        .agg(
-            F.min("pos").alias("a_start"),
-            F.max("pos").alias("a_end"),
-            F.count("*").alias("n_fps"),
-        )
-        .filter(F.col("n_fps") >= min_fps)
-        .select(id_col, eval_id_col, "a_start", "a_end", "n_fps")
-    )
-    if not eager:
-        return out, CacheHandle([cfps])
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        cfps.unpersist()
+    return materialize(
+        _islands(shared, id_col, eval_id_col, max_gap, min_fps),
+        [cfps], eager)
 
 
 def detect_language(
@@ -594,8 +557,6 @@ def salient_terms(
     map-side partial) -> equi-join on term -> per-doc window (group
     size = distinct terms of one doc, bounded by doc length — never
     corpus-sized). Whole-stage-codegen column exprs only."""
-    from pyspark.sql import Window
-
     toks = df.select(
         id_col,
         F.explode(
@@ -636,8 +597,6 @@ def tfidf_topk(
     aggregates, a broadcast join against the q-row df table, and a
     distributed TakeOrderedAndProject top-k — the global sort the
     row_number window would need happens on k rows, never the corpus."""
-    from pyspark.sql import Window
-
     terms = [t.lower() for t in terms]
     toks = df.select(
         id_col,
@@ -971,8 +930,6 @@ def group_quantiles(
     quantiles inherently sort each group (a group must fit a task's
     sort spill); at web scale you'd sample first or keep a sketch —
     this is the exact-answer contract variant."""
-    from pyspark.sql import Window
-
     spark = df.sparkSession
     val = val_col if not isinstance(val_col, str) else F.col(val_col)
     base = df.select(F.col(group_col).alias("_g"), val.alias("_v"))
